@@ -1,7 +1,8 @@
 package graft.text
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import graft.ops.{BoundedPairs, PairBudget}
 
 /** Deduplication operators for large-scale text corpora (north-star
@@ -149,22 +150,6 @@ object Dedup {
       .filter(col("_bn") > maxBucketRows)
       .select(col("band_idx"), col("band_hash"), col("_bn").as("n_members"))
 
-  /** The MEMBERS of the oversized buckets (one row per (bucket, id)) —
-    * the input to the exact-dedup-on-band-hash fallback: members of one
-    * bucket share `numHashes/bands` consecutive minhashes, so beyond
-    * the cap they are treated as one duplicate cluster (keep the min
-    * id per bucket) instead of being pair-enumerated. */
-  def oversizedBucketMembers(
-      signatures: DataFrame, idCol: String,
-      numHashes: Int = 32, bands: Int = 8,
-      maxBucketRows: Long = 100000L): DataFrame = {
-    val banded = bandedTriples(signatures, idCol, numHashes, bands)
-    val oversized = bucketCounts(banded)
-      .filter(col("_bn") > maxBucketRows)
-      .select(col("band_idx"), col("band_hash"))
-    banded.join(oversized, Seq("band_idx", "band_hash"), "left_semi")
-  }
-
   private[graft] def bandedTriples(
       signatures: DataFrame, idCol: String, numHashes: Int, bands: Int): DataFrame = {
     val rows = numHashes / bands
@@ -299,51 +284,88 @@ object Dedup {
     * every doc labeled with the MIN id of its component. Pairs are
     * transitively inconsistent on their own (a~b, b~c says nothing
     * about a,c); cluster ids are what a real pipeline keeps/reports.
-    *
-    * Min-label propagation WITH POINTER JUMPING: each round a vertex
-    * takes the min of (its label, its neighbors' labels, its label's
-    * label). The neighbor step alone converges in O(component
-    * diameter) rounds — a chain-shaped near-dup component turns that
-    * into hundreds of Spark jobs (exactly what the first cut of this
-    * operator did at sf0.1: 1138s). The label-of-label step halves
-    * remaining distances every round (labels are vertex ids, so the
-    * lookup is a self-join), giving O(log diameter) rounds — the
-    * standard hash-to-min style scheme. Each round is two keyed joins
-    * + one aggregate over narrow (id, label) pairs; the driver loop
-    * stops at the fixpoint (min id per component — unique regardless
-    * of schedule, which is what makes it oracle-checkable against a
-    * recursive closure). */
+    * The labels are the unique fixpoint of min-label propagation,
+    * whatever the schedule — which is what makes them oracle-checkable
+    * against a recursive closure. Up to [[DriverEdgeCap]] bigint edges
+    * finish on the driver (one bounded collect + union-find), where the
+    * distributed loop is all per-job overhead; larger edge sets run the
+    * distributed [[connectedComponentsLoop]]. */
   def connectedComponents(
       pairs: DataFrame, maxIter: Int = 50,
       checkpointDir: Option[String] = None): DataFrame =
     connectedComponentsWithRounds(pairs, maxIter, checkpointDir)._1
 
-  /** [[connectedComponents]] plus the number of propagation rounds the
-    * driver loop ran (fixpoint detection included). Exposed so the
-    * O(log diameter) convergence claim is TESTABLE — DedupSpec's
-    * property test locks a diameter-D path graph to ≤ ⌈log₂D⌉+2
-    * rounds, so an edit that silently drops the pointer-jump step
-    * (reverting to O(D) neighbor propagation) fails loudly.
-    *
-    * Fault tolerance: with `checkpointDir = None` (the default) rounds
-    * truncate their plans via `localCheckpoint(true)`, which pins the
-    * materialized blocks to executors — fastest, right for local/test
-    * runs, but on a real cluster losing ONE executor mid-fixpoint
-    * loses blocks with no lineage to rebuild them and kills the job
-    * (at 100 TB, round 40 of 50 is exactly when an executor dies).
-    * Pass `Some(dir)` on a fault-tolerant filesystem (HDFS/object
-    * store) to use RELIABLE `checkpoint()` instead: each round's
-    * labels are written to `dir`, survive executor loss, and the loop
-    * resumes from the last completed round's files. The price is one
-    * FS write+read of the narrow (id, cluster) table per round —
-    * O(rounds · |V|) bytes, bounded and flat. Intermediate round files
-    * accumulate under `dir` until context stop (set
-    * `spark.cleaner.referenceTracking.cleanCheckpoints=true` to let
-    * the ContextCleaner reclaim superseded rounds). */
+  /** Edge count up to which the driver finishes the graph: 2^18
+    * collected (id_a, id_b) longs are 4 MiB and the labels at most 2^19
+    * rows, far below `spark.driver.maxResultSize` (1 GiB by default). */
+  private val DriverEdgeCap = 1 << 18
+
+  /** [[connectedComponents]] plus the number of DISTRIBUTED rounds run
+    * (fixpoint detection included): 0 when the driver finished the
+    * graph. `maxIter` and `checkpointDir` apply to the loop only. */
   def connectedComponentsWithRounds(
       pairs: DataFrame, maxIter: Int = 50,
-      checkpointDir: Option[String] = None,
-      pointerJumps: Int = 1): (DataFrame, Int) = {
+      checkpointDir: Option[String] = None): (DataFrame, Int) = {
+    val spark = pairs.sparkSession
+    val bigint = Seq("id_a", "id_b").forall(c => pairs.schema(c).dataType == LongType)
+    lazy val edges = labelled(spark, "Dedup.connectedComponents collect") {
+      pairs.select(col("id_a"), col("id_b")).limit(DriverEdgeCap + 1).collect()
+    }
+    if (bigint && edges.length <= DriverEdgeCap && !edges.exists(_.anyNull)) {
+      val schema = StructType(Seq("id", "cluster").map(StructField(_, LongType)))
+      (spark.createDataFrame(java.util.Arrays.asList(unionFindLabels(edges): _*), schema), 0)
+    } else connectedComponentsLoop(pairs, maxIter, checkpointDir)
+  }
+
+  /** Union-find that always links the larger root under the smaller, so
+    * each root is its component's min id; finds compress paths. One
+    * (id, cluster) row per vertex. */
+  private def unionFindLabels(edges: Array[Row]): Seq[Row] = {
+    val parent = scala.collection.mutable.LongMap.empty[Long]
+    def find(v: Long): Long = {
+      var r = parent.getOrElseUpdate(v, v)
+      while (parent(r) != r) r = parent(r)
+      var x = v
+      while (x != r) { val p = parent(x); parent(x) = r; x = p }
+      r
+    }
+    edges.foreach { e =>
+      val (a, b) = (find(e.getLong(0)), find(e.getLong(1)))
+      if (a != b) parent(math.max(a, b)) = math.min(a, b)
+    }
+    parent.keys.toArray.toSeq.map(v => Row(v, find(v)))
+  }
+
+  /** Runs `body` under the Spark job description `desc`, then restores
+    * the caller's. The job group is left alone. */
+  private def labelled[T](spark: SparkSession, desc: String)(body: => T): T = {
+    val sc = spark.sparkContext
+    val prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(desc)
+    try body finally sc.setJobDescription(prev)
+  }
+
+  /** The distributed path: min-label propagation WITH POINTER JUMPING.
+    * Each round a vertex takes the min of (its label, its neighbors'
+    * labels, its label's label). The neighbor step alone needs
+    * O(component diameter) rounds — hundreds of Spark jobs on a chain;
+    * the label-of-label step (a self-join: labels are vertex ids)
+    * halves remaining distances every round, giving O(log diameter)
+    * rounds. One jump per round: on the simhash near-dup graph a second
+    * one did not cut the round count. Returns the labels and the rounds
+    * run; throws if `maxIter` rounds end before the fixpoint rather
+    * than return partially propagated labels.
+    *
+    * Fault tolerance: `checkpointDir = None` truncates each round's
+    * plan with `localCheckpoint(true)` — fastest, but its blocks die
+    * with their executor, and the job with them. `Some(dir)` on a
+    * fault-tolerant filesystem uses RELIABLE `checkpoint()`, for one
+    * write + read of the narrow (id, cluster) table per round. Round
+    * files accumulate under `dir` until context stop (unless
+    * `spark.cleaner.referenceTracking.cleanCheckpoints=true`). */
+  private[text] def connectedComponentsLoop(
+      pairs: DataFrame, maxIter: Int,
+      checkpointDir: Option[String]): (DataFrame, Int) = {
     val spark = pairs.sparkSession
     checkpointDir.foreach(spark.sparkContext.setCheckpointDir)
     def truncate(df: DataFrame): DataFrame =
@@ -360,29 +382,23 @@ object Dedup {
     // Checkpointing truncates the plan to the materialized partitions,
     // so every round plans against a constant-size leaf.
     //
-    // Round-0 fusion (r16, guide §2.4): the identity labeling's first
-    // neighbor round is `min(id, min(neighbors))` — computable as ONE
-    // aggregation over the symmetric edge list (every vertex appears
-    // as a src). That replaces the old verts-distinct shuffle + an
-    // identity checkpoint + the first round's edges-scale join with a
-    // single groupBy: one fewer full pass over the edge table AND
-    // (usually) one fewer driver-loop round. Same unique fixpoint —
-    // min label per component is schedule-independent.
-    var labels = truncate(edges.groupBy(col("src"))
-      .agg(min(col("dst")).as("_nl"))
-      .select(col("src").as("id"),
-        least(col("src"), col("_nl")).as("cluster")))
+    // Round 0 fuses the identity labeling with the first neighbor round:
+    // ONE aggregation over the symmetric edge list (every vertex is a src).
+    var labels = labelled(spark, "Dedup.connectedComponents round 0") {
+      truncate(edges.groupBy(col("src"))
+        .agg(min(col("dst")).as("_nl"))
+        .select(col("src").as("id"),
+          least(col("src"), col("_nl")).as("cluster")))
+    }
     // the checkpointed frame whose blocks back `labels` — freed once
     // the NEXT round's checkpoint is materialized. Without this the
     // loop accumulates O(rounds) block-manager scratch: a local
     // checkpoint's blocks live until driver GC + ContextCleaner reach
-    // the dropped reference, which on a big fixture is never soon
-    // enough (sf100: the clusters route exhausted the local disk while
-    // the pairs route alone fit).
+    // the dropped reference (sf100: the local disk ran out).
     var prevCkpt = labels
     var iter = 0
     var done = false
-    while (!done && iter < maxIter) {
+    while (!done && iter < maxIter) labelled(spark, s"Dedup.connectedComponents round ${iter + 1}") {
       val nm = edges.join(labels.select(col("id").as("dst"), col("cluster")), "dst")
         .groupBy(col("src")).agg(min(col("cluster")).as("_nl"))
       // _prev rides through the round so the fixpoint check below is a
@@ -394,32 +410,14 @@ object Dedup {
         .select(col("id"),
           least(col("cluster"), coalesce(col("_nl"), col("cluster"))).as("cluster"),
           col("cluster").as("_prev")))
-      // pointer jumps: follow the label to ITS label (labels are
-      // vertex ids, so each is a labels-scale self-join) — every jump
-      // halves remaining label-chain depth. `pointerJumps` is a lever,
-      // DEFAULT 1: measured on the simhash near-dup graph (r17), a
-      // second jump does NOT cut the round count — convergence there
-      // is edge-hop-limited (the min label flows one edge hop per
-      // neighbor round; label chains are already shallow), so the
-      // extra self-join is pure added work. The fixpoint is unchanged
-      // for any jump count: jumps only propagate existing labels
-      // monotonically toward the component min, which is
-      // schedule-independent.
-      var jumped = step
-      for (_ <- 1 to math.max(1, pointerJumps)) {
-        val j = truncate(jumped
-          .join(jumped.select(col("id").as("_lid"), col("cluster").as("_lc")),
-            col("cluster") === col("_lid"), "left")
-          .select(col("id"),
-            least(col("cluster"), coalesce(col("_lc"), col("cluster"))).as("cluster"),
-            col("_prev")))
-        // the intermediate jump's blocks are superseded immediately;
-        // `step` itself is freed below with the round's other scratch
-        if (!(jumped eq step))
-          org.apache.spark.sql.graftbridge.Bridge.unpersistLocalCheckpoint(jumped)
-        jumped = j
-      }
-      val next = jumped
+      // pointer jump: follow the label to ITS label; it only moves
+      // labels monotonically toward the component min
+      val next = truncate(step
+        .join(step.select(col("id").as("_lid"), col("cluster").as("_lc")),
+          col("cluster") === col("_lid"), "left")
+        .select(col("id"),
+          least(col("cluster"), coalesce(col("_lc"), col("cluster"))).as("cluster"),
+          col("_prev")))
       val changed = next.filter(col("cluster") =!= col("_prev")).limit(1).count()
       // `next` is materialized with no lineage into the superseded
       // round — free its scratch now (never the frame being returned)
@@ -431,6 +429,12 @@ object Dedup {
       iter += 1
     }
     edges.unpersist()
+    if (!done) {
+      org.apache.spark.sql.graftbridge.Bridge.unpersistLocalCheckpoint(prevCkpt)
+      throw new IllegalStateException(
+        s"connectedComponents: no fixpoint within maxIter=$maxIter rounds " +
+          s"($iter rounds run); labels would be only partially propagated")
+    }
     (labels, iter)
   }
 

@@ -33,8 +33,6 @@ object TextAnalysis {
     TextHashExpressions.charClassCount(text, ".,;:!?")
   def digitCount(text: Column): Column =
     TextHashExpressions.charClassCount(text, "0123456789")
-  def upperCount(text: Column): Column =
-    TextHashExpressions.charClassCount(text, ('A' to 'Z').mkString)
 
   /** Heuristic quality score in [0,1]: penalize extreme length, high
     * punct/digit density, low word diversity. Weights are fixed

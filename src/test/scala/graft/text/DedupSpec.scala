@@ -128,7 +128,7 @@ class DedupSpec extends SparkSpec {
     // jump step fails this at every D here.
     for (d <- Seq(8L, 100L, 1000L)) {
       val path = (0L until d).map(i => (i, i + 1)).toDF("id_a", "id_b")
-      val (labels, rounds) = Dedup.connectedComponentsWithRounds(path, maxIter = 50)
+      val (labels, rounds) = Dedup.connectedComponentsLoop(path, maxIter = 50, checkpointDir = None)
       val out = labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(out.size == d + 1 && out.values.forall(_ == 0L), s"D=$d labels wrong")
       val bound = math.ceil(math.log(d.toDouble) / math.log(2.0)).toInt + 2
@@ -144,9 +144,10 @@ class DedupSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("ccchk").toString
     val pairs = (Seq((2L, 3L), (1L, 2L), (11L, 10L), (11L, 3L), (5L, 6L)) ++
       (20L until 50L).map(i => (i, i + 1))).toDF("id_a", "id_b")
-    val (localLabels, localRounds) = Dedup.connectedComponentsWithRounds(pairs)
+    val (localLabels, localRounds) =
+      Dedup.connectedComponentsLoop(pairs, maxIter = 50, checkpointDir = None)
     val (relLabels, relRounds) =
-      Dedup.connectedComponentsWithRounds(pairs, checkpointDir = Some(dir))
+      Dedup.connectedComponentsLoop(pairs, maxIter = 50, checkpointDir = Some(dir))
     val lm = localLabels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val rm = relLabels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(lm == rm)
@@ -166,6 +167,79 @@ class DedupSpec extends SparkSpec {
       .filter(p => p.getFileName.toString.startsWith("part-"))
       .mapToLong(p => java.nio.file.Files.size(p)).sum()
     assert(partBytes > 0L, "checkpoint part files are empty")
+  }
+
+  private def labelSet(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
+    df.collect().map(r => r.getLong(0) -> r.getLong(1)).toSet
+
+  test("connectedComponents driver path equals the distributed loop on seeded random graphs") {
+    // each seed: 30 small random graphs on disjoint id ranges (duplicate
+    // edges, both orientations, self-loops, negative ids) plus a
+    // diameter-D path, edges in random order; the driver path must label
+    // every vertex exactly as the distributed loop does
+    for ((seed, d) <- Seq((1, 8), (2, 100), (3, 1000))) {
+      val rnd = new scala.util.Random(seed)
+      val small = (0 until 30).flatMap { g =>
+        val base = g * 100L - 1500L
+        val n = 1 + rnd.nextInt(12)
+        Seq.fill(rnd.nextInt(2 * n + 1)) {
+          val (a, b) = (base + rnd.nextInt(n), base + rnd.nextInt(n))
+          if (rnd.nextInt(5) == 0) (a, a) else (a, b)
+        }.flatMap(e => if (rnd.nextInt(4) == 0) Seq(e, e.swap, e) else Seq(e))
+      }
+      val path = (10000L until 10000L + d).map(i => if (rnd.nextBoolean()) (i, i + 1) else (i + 1, i))
+      val pairs = rnd.shuffle(small ++ path).toDF("id_a", "id_b")
+      val (driver, rounds) = Dedup.connectedComponentsWithRounds(pairs)
+      assert(rounds == 0, s"seed $seed: a ${small.size + d}-edge graph left the driver path")
+      val want = labelSet(Dedup.connectedComponentsLoop(pairs, maxIter = 50, checkpointDir = None)._1)
+      assert(labelSet(driver) == want, s"seed $seed: driver labels differ from the loop's")
+      assert(want.collect { case (v, c) if v >= 10000L => c } == Set(10000L))
+    }
+    val empty = Seq.empty[(Long, Long)].toDF("id_a", "id_b")
+    val (none, rounds) = Dedup.connectedComponentsWithRounds(empty)
+    assert(rounds == 0 && none.count() == 0L)
+    assert(none.schema.map(_.dataType) == Seq(org.apache.spark.sql.types.LongType,
+      org.apache.spark.sql.types.LongType))
+  }
+
+  test("connectedComponents loop fails loudly when maxIter ends before the fixpoint") {
+    val path = (0L until 99L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    val err = intercept[IllegalStateException](
+      Dedup.connectedComponentsLoop(path, maxIter = 1, checkpointDir = None))
+    assert(err.getMessage.contains("maxIter=1") && err.getMessage.contains("1 rounds run"),
+      err.getMessage)
+  }
+
+  test("connectedComponents labels its jobs and restores the caller's description") {
+    val sc = spark.sparkContext
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+          .foreach(d => seen.add(d))
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup("cc-group", "caller's group")
+    sc.setJobDescription("caller's job")
+    try {
+      // repartitioned: a bare local relation collects without a job
+      val pairs = Seq((1L, 2L), (2L, 3L)).toDF("id_a", "id_b").repartition(2)
+      Dedup.connectedComponentsWithRounds(pairs)
+      Dedup.connectedComponentsLoop(pairs, maxIter = 50, checkpointDir = None)
+      assert(sc.getLocalProperty("spark.job.description") == "caller's job")
+      assert(sc.getLocalProperty("spark.jobGroup.id") == "cc-group")
+      val want = Set("Dedup.connectedComponents collect",
+        "Dedup.connectedComponents round 0", "Dedup.connectedComponents round 1")
+      org.scalatest.concurrent.Eventually.eventually(
+        org.scalatest.concurrent.Eventually.timeout(
+          org.scalatest.time.Span(10, org.scalatest.time.Seconds))) {
+        assert(want.subsetOf(seen.toArray.map(_.toString).toSet), seen.toString)
+      }
+    } finally {
+      sc.clearJobGroup()
+      sc.setJobDescription(null)
+      sc.removeSparkListener(listener)
+    }
   }
 
   test("wordShingles produces distinct n-grams") {
